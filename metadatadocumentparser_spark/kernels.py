@@ -1,35 +1,32 @@
 """The vectorized structural parse kernel (the engine's ONE heavy UDF).
 
-``mapInPandas`` / ``mapInArrow`` over transcript rows: each Arrow batch of
-turns is parsed structurally (payload → blocks/images/tables/meta/segments
-with char spans) and returned as nested arrays — one output row per turn.
-Everything downstream (classification, formula scoring, LaTeX, boilerplate
-tree, ordering, indexes) is native Catalyst on the exploded arrays.
+``mapInArrow`` over transcript rows: each Arrow batch of turns is parsed
+structurally (payload → blocks/images/tables/meta/segments with char spans)
+and returned as nested arrays — one output row per turn. Everything
+downstream (classification, formula scoring, LaTeX, boilerplate tree,
+ordering, indexes) is native Catalyst on the exploded arrays.
 
-Two physically different kernels share ONE record builder (identical
-output, golden-checked):
-- pandas kernel (mapInPandas): dict records → pandas object DataFrame →
-  Arrow (Spark's serializer does the pandas→Arrow conversion per batch).
-- arrow kernel (mapInArrow): dict records → pa.RecordBatch.from_pylist
-  directly against the derived Arrow schema — skips the pandas
-  object-DataFrame layer entirely (no block-manager, no object-dtype
-  inference on deeply nested columns). See plans/pipeline.parse_transcripts
-  (engine=...) for the measured comparison.
+The docparse/htmlseg record dicts go straight into
+``pa.RecordBatch.from_pylist`` against the schema derived from PARSED_DDL:
+Arrow reads only the fields the schema names (extra keys such as
+``extracted_text``/``spans`` are ignored), so the kernel copies nothing
+field by field — only ``meta.page_sizes`` changes shape, ``[w, h]`` lists
+to tuples (Arrow builds a struct from a tuple positionally, not from a
+list).
 
 Scale notes:
 - per-turn independence → the kernel needs no grouping, no shuffle; it runs
-  map-side on whatever partitioning the reader produced (the pipeline
-  repartitions by (conv_id, turn_idx) first, which removes conversation-level
-  skew entirely — SURVEY.md §4.2).
+  map-side on whatever partitioning arrives. plans/pipeline.parse_transcripts
+  repartitions by (conv_id, turn_idx) first only when the input has fewer
+  splits than the cluster parallelism (or when asked), which removes
+  conversation-level skew for clustered inputs (SURVEY.md §4.2).
 - Arrow batch size is capped via spark.sql.execution.arrow.maxRecordsPerBatch
   (session.py) so multi-MB turn payloads cannot blow executor memory.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import inspect
 
 from . import docparse, htmlseg
 
@@ -76,167 +73,50 @@ PARSED_DDL = ", ".join(
     ]
 )
 
-_OUT_COLUMNS = [
-    "conv_id", "turn_idx", "role", "tool", "ts", "html_raw", "is_html",
-    "meta", "column_layout", "blocks", "images", "tables", "segments",
-]
 
 
-def _turn_record(conv_id, turn_idx, role, tool, ts, text, parse_kwargs) -> dict:
-    """Parse ONE turn into the output-row dict (shared by both kernels).
-    Returns None for a row with no usable (conv_id, turn_idx) key — the
-    schema allows NULLs there, and int(None)/int(NaN) would otherwise
-    kill the whole task (r5 review), violating the engine's
-    never-fail-the-document posture (reference parser.py:148-150
-    swallows per-stage errors; a keyless row is skipped, not fatal)."""
-    if conv_id is None or turn_idx is None or turn_idx != turn_idx:  # NaN
+_IN_COLS = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
+
+
+def _turn_record(conv_id, turn_idx, role, tool, ts, text, flags) -> dict | None:
+    """Parse ONE turn into its output-row dict. Returns None for a row with
+    no usable (conv_id, turn_idx) key — the schema allows NULLs there, and
+    a keyless row is skipped rather than failing the task (the engine's
+    never-fail-the-document posture; reference parser.py:148-150 swallows
+    per-stage errors)."""
+    if conv_id is None or turn_idx is None:
         return None
-    text = text if isinstance(text, str) else ""
-    parsed = docparse.parse_turn(text, **parse_kwargs)
-    is_html = parsed["html"] is not None
-    html_raw = parsed["html"] if is_html else None
-    if is_html:
-        segments = [
-            {
-                "seg_idx": s["seg_idx"],
-                "text": s["text"],
-                "start": s["start"],
-                "end": s["end"],
-                "tag_path": s["tag_path"],
-                "words": s["words"],
-                "link_density": s["link_density"],
-                "boiler_container": s["boiler_container"],
-            }
-            for s in htmlseg.segment_html(parsed["html"], parsed["html_start"])
-        ]
-        column_layout = None
+    rec = docparse.parse_turn(text if isinstance(text, str) else "", **flags)
+    html = rec["html"]
+    meta = rec["meta"]
+    meta["page_sizes"] = [tuple(p) for p in meta["page_sizes"]]
+    rec.update(conv_id=conv_id, turn_idx=turn_idx, role=role, tool=tool, ts=ts,
+               html_raw=html, is_html=html is not None)
+    if html is not None:
+        rec["segments"] = htmlseg.segment_html(html, rec["html_start"])
+        rec["column_layout"] = None
     else:
-        segments = []
-        column_layout = parsed["column_layout"]
-    m = parsed["meta"]
-    return {
-        "conv_id": conv_id,
-        "turn_idx": int(turn_idx),
-        "role": role,
-        "tool": tool,
-        "ts": ts,
-        "html_raw": html_raw,
-        "is_html": is_html,
-        "meta": {
-            **{k: m[k] for k in (
-                "title", "author", "subject", "creator", "producer",
-                "creation_date", "modification_date", "num_pages", "file_size",
-            )},
-            "page_sizes": [
-                {"width": p[0], "height": p[1]} for p in m["page_sizes"]
-            ],
-        },
-        "column_layout": column_layout,
-        "blocks": [
-            {
-                "block_idx": b["block_idx"],
-                "page_num": b["page_num"],
-                "bbox": b["bbox"],
-                "text": b["text"],
-                "font_size": b["font_size"],
-                "font_name": b["font_name"],
-                "needs_classify": b["needs_classify"],
-                "page_height": b["page_height"],
-                "span_start": b["span_start"],
-                "span_end": b["span_end"],
-            }
-            for b in parsed["blocks"]
-        ],
-        "images": parsed["images"],
-        "tables": parsed["tables"],
-        "segments": segments,
-    }
+        rec["segments"] = []
+    return rec
 
 
-def _flags(
-    text_method, layout_aware, column_aware, header_margin, footer_margin,
-    table_method, extract_text, extract_images_flag, extract_tables_flag,
-) -> dict:
-    return dict(
-        text_method=text_method,
-        layout_aware=layout_aware,
-        column_aware=column_aware,
-        header_margin=header_margin,
-        footer_margin=footer_margin,
-        table_method=table_method,
-        extract_text=extract_text,
-        extract_images_flag=extract_images_flag,
-        extract_tables_flag=extract_tables_flag,
-    )
-
-
-def make_parse_kernel(
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
-):
-    """Returns the mapInPandas function for the given parse flags (the
-    reference parse() kwargs, parser.py:56-68). Flags are plain closure
-    values — they select code paths once per batch, never per row."""
-    kw = _flags(
-        text_method, layout_aware, column_aware, header_margin, footer_margin,
-        table_method, extract_text, extract_images_flag, extract_tables_flag,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [
-                r
-                for r in (
-                    _turn_record(*row, kw)
-                    for row in zip(
-                        pdf["conv_id"], pdf["turn_idx"], pdf["role"],
-                        pdf["tool"], pdf["ts"], pdf["text"],
-                    )
-                )
-                if r is not None
-            ]
-            yield pd.DataFrame.from_records(recs, columns=_OUT_COLUMNS)
-
-    return kernel
-
-
-def make_parse_kernel_arrow(
-    arrow_schema,
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
-):
-    """mapInArrow variant: identical records, encoded straight to a
-    pa.RecordBatch against the pre-derived schema (derive it on the driver
-    with pyspark.sql.pandas.types.to_arrow_schema — executors have no
-    session). Skips the pandas object-DataFrame layer the mapInPandas path
-    pays on both sides of the serializer."""
+def make_parse_kernel_arrow(arrow_schema, **flags):
+    """The mapInArrow function for the given parse flags (the reference
+    parse() kwargs, parser.py:56-68; docparse.parse_turn's keywords).
+    ``arrow_schema`` is PARSED_DDL as Arrow — derive it on the driver with
+    pyspark.sql.pandas.types.to_arrow_schema, executors have no session.
+    Flags are bound here, on the driver, so a misspelled one raises
+    TypeError before any task runs; they select code paths, never per-row
+    state."""
     import pyarrow as pa
 
-    kw = _flags(
-        text_method, layout_aware, column_aware, header_margin, footer_margin,
-        table_method, extract_text, extract_images_flag, extract_tables_flag,
-    )
-    in_cols = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
+    inspect.signature(docparse.parse_turn).bind("", **flags)
 
     def kernel(batches):
         for batch in batches:
-            cols = [batch.column(c).to_pylist() for c in in_cols]
+            cols = [batch.column(c).to_pylist() for c in _IN_COLS]
             recs = [
-                r for r in (_turn_record(*row, kw) for row in zip(*cols))
+                r for r in (_turn_record(*row, flags) for row in zip(*cols))
                 if r is not None
             ]
             yield pa.RecordBatch.from_pylist(recs, schema=arrow_schema)

@@ -49,6 +49,8 @@ class TranscriptExtractor:
         self.footer_margin = footer_margin
         self.header_margin = header_margin
         self.fast_column_detection = fast_column_detection
+        self._last_text_method = "pymupdf"
+        self._last_parse = None
 
     def parse(
         self,
@@ -87,12 +89,15 @@ class TranscriptExtractor:
         # (r5 review — it was hardcoded "pymupdf")
         self._last_text_method = text_method
         # the export fast path (canonical_struct_from_parsed) replays the
-        # formula stage array-side, so it must know the parse's mode; an
-        # OCR strategy post-processes the formulas TABLE, which only the
-        # aggregate form can consume
-        self._last_strict = strict_mode
-        self._last_formulas = extract_formulas
-        self._last_ocr = ocr_strategy
+        # formula stage array-side, so it must know the parse's mode, and
+        # it holds only for exactly these tables (a snapshot: later edits
+        # to the returned dict must not match); an OCR strategy
+        # post-processes the formulas TABLE, which only the aggregate form
+        # can consume
+        self._last_parse = (
+            None if ocr_strategy is not None
+            else (dict(outs), strict_mode, extract_formulas)
+        )
         return outs
 
     def compare_extraction_methods(self) -> dict:
@@ -106,19 +111,22 @@ class TranscriptExtractor:
 
     def _struct(self, outs: dict) -> DataFrame:
         # shuffle-free array-side build straight off the parsed table
-        # (r6) whenever the outs dict is untransformed; OCR'd formulas
-        # exist only at table grain -> aggregate form
-        if getattr(self, "_last_ocr", None) is None and "parsed" in outs:
-            return canonical_struct_from_parsed(
-                outs["parsed"],
-                extraction_method=self._method(),
-                strict_mode=getattr(self, "_last_strict", False),
-                include_formulas=getattr(self, "_last_formulas", True),
-            )
-        return canonical_struct(outs, extraction_method=self._method())
-
-    def _method(self) -> str:
-        return getattr(self, "_last_text_method", "pymupdf")
+        # (r6) only when outs holds exactly the tables the latest parse()
+        # returned; anything else (an earlier parse, caller-edited tables,
+        # OCR'd formulas) goes through the aggregate form, which reads the
+        # tables it is handed
+        if self._last_parse is not None:
+            tables, strict_mode, extract_formulas = self._last_parse
+            if outs.keys() == tables.keys() and all(
+                outs[k] is tables[k] for k in tables
+            ):
+                return canonical_struct_from_parsed(
+                    outs["parsed"],
+                    extraction_method=self._last_text_method,
+                    strict_mode=strict_mode,
+                    include_formulas=extract_formulas,
+                )
+        return canonical_struct(outs, extraction_method=self._last_text_method)
 
     def compare_export_formats(self, doc_dict: dict) -> dict:
         return compare_export_formats(doc_dict)

@@ -1,17 +1,19 @@
 """The flagship extraction plan (the reference parse(), distributed).
 
     read transcripts
-      → repartition(conv_id, turn_idx)        # turn-level keys ⇒ no conv skew
-      → structural parse kernel (mapInPandas) # the ONE Python stage
+      → repartition(conv_id, turn_idx)        # only when needed (see
+                                              # parse_transcripts' repartition)
+      → structural parse kernel (mapInArrow)  # the ONE Python stage
       → native classify / score / LaTeX / boilerplate tree
       → exploded output tables (blocks, formulas, images, tables, meta,
         segments) + per-turn main-content text with char spans
 
 Everything after the kernel is whole-stage-codegen'd Catalyst. The only
-shuffles are (a) the explicit turn-level repartition before the kernel and
-(b) per-(conv,turn) windows for order-sensitive indexes (W6) and the HTML
-segment tree — both keyed by (conv_id, turn_idx), never by conv_id alone,
-so one 10^6-turn conversation spreads over the whole cluster.
+shuffles are (a) the turn-level repartition before the kernel, when it
+fires, and (b) per-(conv,turn) windows for order-sensitive indexes (W6)
+and the HTML segment tree — both keyed by (conv_id, turn_idx), never by
+conv_id alone, so one 10^6-turn conversation spreads over the whole
+cluster.
 """
 
 from __future__ import annotations
@@ -21,10 +23,15 @@ from pyspark.sql import functions as F
 
 from ..functions.boilerplate import is_content
 from ..functions.classify import classify_block_type
-from ..functions.formula import formula_score_cols, is_formula_candidate, stripped_text
+from ..functions.formula import (
+    ALL_MATH_CHARS,
+    formula_score_cols,
+    is_formula_candidate,
+    stripped_text,
+)
 from ..functions.htmlmeta import html_author, html_date, html_title
 from ..functions.latex import latex_heuristic
-from ..kernels import PARSED_DDL, make_parse_kernel, make_parse_kernel_arrow
+from ..kernels import PARSED_DDL, make_parse_kernel_arrow
 
 _TURN_KEY = ("conv_id", "turn_idx")
 
@@ -42,7 +49,6 @@ def parse_transcripts(
     extract_tables_flag: bool = True,
     num_partitions: int | None = None,
     repartition: str | bool = "auto",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Raw transcripts → parsed nested rows (kernel output).
 
@@ -55,13 +61,6 @@ def parse_transcripts(
         inputs that arrive clustered/bucketed by conv_id.
       - True: always shuffle to turn-level keys (skewed/bucketed inputs).
       - False: never.
-
-    engine:
-      - "arrow" (default): mapInArrow — records encoded straight to
-        pa.RecordBatch (skips the pandas object-DataFrame layer on both
-        serializer sides; measured faster on this corpus, BENCH.md r3).
-      - "pandas": mapInPandas (the r1/r2 path, kept for comparison).
-    Both kernels build the IDENTICAL records (golden-checked).
     """
     sc = df.sparkSession.sparkContext
     want = num_partitions or sc.defaultParallelism * 2
@@ -88,19 +87,13 @@ def parse_transcripts(
         extract_images_flag=extract_images_flag,
         extract_tables_flag=extract_tables_flag,
     )
-    if engine == "arrow":
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-        # derive the Arrow schema on the DRIVER (needs the session) and
-        # close over it — executors cannot parse DDL
-        arrow_schema = to_arrow_schema(StructType.fromDDL(PARSED_DDL))
-        return df.mapInArrow(
-            make_parse_kernel_arrow(arrow_schema, **kw), schema=PARSED_DDL
-        )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine {engine!r}")
-    return df.mapInPandas(make_parse_kernel(**kw), schema=PARSED_DDL)
+    # derive the Arrow schema on the DRIVER (needs the session) and
+    # close over it — executors cannot parse DDL
+    arrow_schema = to_arrow_schema(StructType.fromDDL(PARSED_DDL))
+    return df.mapInArrow(make_parse_kernel_arrow(arrow_schema, **kw), schema=PARSED_DDL)
 
 
 def blocks_of(parsed: DataFrame) -> DataFrame:
@@ -122,6 +115,31 @@ def blocks_of(parsed: DataFrame) -> DataFrame:
     )
 
 
+def formula_cols(text, font_size, strict_mode: bool = False):
+    """One block's formula columns — (stripped text, confidence, passes) —
+    over a raw block-text column and its font size (F2 score, P7 filter,
+    formula.py:17-169). The ONE definition shared by formulas_of and the
+    array-side export (sinks.export.canonical_struct_from_parsed)."""
+    threshold = 0.8 if strict_mode else 0.7
+    t = stripped_text(text)
+    score, confidence, _ = formula_score_cols(t, font_size, strict_mode)
+    # r6 fast path: ONE translate scan over the RAW text decides the
+    # zero-math-char case before anything else runs. Stripping removes
+    # only whitespace + \x1c-\x1f — none of which are in either alphabet
+    # — so zero union-count on raw ⟺ zero (sym + chr) on stripped ⟹
+    # score 0 (formula_score_cols' gating proof) < threshold ⟹ never
+    # passes. Prose blocks (the overwhelming majority) skip the strip
+    # and both per-alphabet translates entirely.
+    raw_has_math = F.length(text) != F.length(F.translate(text, ALL_MATH_CHARS, ""))
+    # lazy CASE: the P7 negative-pattern scan only runs for blocks whose
+    # score already clears the threshold (a tiny fraction of the corpus)
+    passes = F.when(
+        raw_has_math,
+        F.when(score >= threshold, is_formula_candidate(t)).otherwise(F.lit(False)),
+    ).otherwise(F.lit(False))
+    return t, confidence, passes
+
+
 def formulas_of(parsed: DataFrame, strict_mode: bool = False) -> DataFrame:
     """Formula stage (formula.py:17-169), fully native: posexplode blocks
     (pos = block order), ONE whole-stage-codegen'd projection computing the
@@ -130,7 +148,6 @@ def formulas_of(parsed: DataFrame, strict_mode: bool = False) -> DataFrame:
     re-evaluate translate() per reference, measured 3× slower), then the
     W6 running formula_index as a row_number window over only the passing
     rows (a shuffle of ~0.1% of blocks, keyed by turn — never conv)."""
-    threshold = 0.8 if strict_mode else 0.7
     # zip only the four consumed fields (text, font_size, page_num, bbox)
     # before the posexplode — nested schema pruning cannot see through the
     # generator's struct access, but it prunes field-array extraction, so
@@ -142,25 +159,7 @@ def formulas_of(parsed: DataFrame, strict_mode: bool = False) -> DataFrame:
         F.col("blocks.bbox").alias("bbox"),
     )
     b = parsed.select(*_TURN_KEY, F.posexplode(zipped).alias("bpos", "b"))
-    raw = F.col("b.text")
-    t = stripped_text(raw)
-    score, confidence, _ = formula_score_cols(t, F.col("b.font_size"), strict_mode)
-    # r6 fast path: ONE translate scan over the RAW text decides the
-    # zero-math-char case before anything else runs. Stripping removes
-    # only whitespace + \x1c-\x1f — none of which are in either alphabet
-    # — so zero union-count on raw ⟺ zero (sym + chr) on stripped ⟹
-    # score 0 (formula_score_cols' gating proof) < threshold ⟹ never
-    # passes. Prose blocks (the overwhelming majority) skip the strip
-    # regexp_replace and both per-alphabet translates entirely.
-    from ..functions.formula import ALL_MATH_CHARS
-
-    raw_has_math = F.length(raw) != F.length(F.translate(raw, ALL_MATH_CHARS, ""))
-    # lazy CASE: the P7 negative-pattern scan only runs for blocks whose
-    # score already clears the threshold (a tiny fraction of the corpus)
-    passes = F.when(
-        raw_has_math,
-        F.when(score >= threshold, is_formula_candidate(t)).otherwise(F.lit(False)),
-    ).otherwise(F.lit(False))
+    t, confidence, passes = formula_cols(F.col("b.text"), F.col("b.font_size"), strict_mode)
     passed = b.select(
         *_TURN_KEY,
         "bpos",
@@ -192,28 +191,33 @@ def tables_of(parsed: DataFrame) -> DataFrame:
     return t.select(*_TURN_KEY, "t.*")
 
 
+_META_FIELDS = (
+    "title", "author", "subject", "creator", "producer", "creation_date",
+    "modification_date", "num_pages", "file_size", "page_sizes",
+)
+# HTML turns take DOM-heuristic values (native regexp_extract) in place of
+# these trailer fields
+_HTML_META = {"title": html_title, "author": html_author, "creation_date": html_date}
+
+
+def meta_cols() -> list:
+    """The document-metadata columns of a parsed row, in output order —
+    the ONE definition shared by meta_of and the array-side export
+    (sinks.export.canonical_struct_from_parsed)."""
+
+    def col(field):
+        trailer = F.col(f"meta.{field}")
+        if field in _HTML_META:
+            html = _HTML_META[field](F.col("html_raw"))
+            return F.when(F.col("is_html"), html).otherwise(trailer).alias(field)
+        return trailer.alias(field)
+
+    return [col(f) for f in _META_FIELDS]
+
+
 def meta_of(parsed: DataFrame) -> DataFrame:
-    """Document metadata; HTML turns get DOM-heuristic title/author/date
-    (native regexp_extract) in place of the trailer fields."""
-    return parsed.select(
-        *_TURN_KEY,
-        F.when(F.col("is_html"), html_title(F.col("html_raw")))
-        .otherwise(F.col("meta.title"))
-        .alias("title"),
-        F.when(F.col("is_html"), html_author(F.col("html_raw")))
-        .otherwise(F.col("meta.author"))
-        .alias("author"),
-        F.col("meta.subject").alias("subject"),
-        F.col("meta.creator").alias("creator"),
-        F.col("meta.producer").alias("producer"),
-        F.when(F.col("is_html"), html_date(F.col("html_raw")))
-        .otherwise(F.col("meta.creation_date"))
-        .alias("creation_date"),
-        F.col("meta.modification_date").alias("modification_date"),
-        F.col("meta.num_pages").alias("num_pages"),
-        F.col("meta.file_size").alias("file_size"),
-        F.col("meta.page_sizes").alias("page_sizes"),
-    )
+    """Document metadata, one row per turn (see meta_cols)."""
+    return parsed.select(*_TURN_KEY, *meta_cols())
 
 
 def _classified_segments() -> "F.Column":

@@ -133,7 +133,9 @@ def canonical_struct_from_parsed(
     reassemble what the parsed row already holds as ordered nested
     arrays. This form is ONE shuffle-free projection: per-element
     transforms evaluate the same native classify/formula/LaTeX
-    expressions inside array lambdas, and element order equals the
+    expressions inside array lambdas (metadata and formula columns come
+    from the pipeline's own definitions, plans.pipeline.meta_cols /
+    formula_cols), and element order equals the
     aggregate form's sort order by construction (block_idx / (page_num,
     image_index) / table_index / formula_index are the emission orders).
 
@@ -144,33 +146,10 @@ def canonical_struct_from_parsed(
     OCR-postprocessed formulas table, which exists only at table grain).
     """
     from ..functions.classify import classify_block_type
-    from ..functions.formula import (
-        ALL_MATH_CHARS,
-        formula_score_cols,
-        is_formula_candidate,
-        stripped_text,
-    )
-    from ..functions.htmlmeta import html_author, html_date, html_title
     from ..functions.latex import latex_heuristic
+    from ..plans.pipeline import formula_cols, meta_cols
 
-    metadata = F.struct(
-        F.when(F.col("is_html"), html_title(F.col("html_raw")))
-        .otherwise(F.col("meta.title"))
-        .alias("title"),
-        F.when(F.col("is_html"), html_author(F.col("html_raw")))
-        .otherwise(F.col("meta.author"))
-        .alias("author"),
-        F.col("meta.subject").alias("subject"),
-        F.col("meta.creator").alias("creator"),
-        F.col("meta.producer").alias("producer"),
-        F.when(F.col("is_html"), html_date(F.col("html_raw")))
-        .otherwise(F.col("meta.creation_date"))
-        .alias("creation_date"),
-        F.col("meta.modification_date").alias("modification_date"),
-        F.col("meta.num_pages").alias("num_pages"),
-        F.col("meta.file_size").alias("file_size"),
-        F.col("meta.page_sizes").alias("page_sizes"),
-    )
+    metadata = F.struct(*meta_cols())
     text_blocks = F.transform(
         "blocks",
         lambda b: F.struct(
@@ -207,25 +186,12 @@ def canonical_struct_from_parsed(
         ),
     )
     if include_formulas:
-        threshold = 0.8 if strict_mode else 0.7
 
-        def _passes(b):
-            raw = b["text"]
-            t = stripped_text(raw)
-            score, _conf, _ = formula_score_cols(t, b["font_size"], strict_mode)
-            raw_has_math = F.length(raw) != F.length(
-                F.translate(raw, ALL_MATH_CHARS, "")
-            )
-            return F.when(
-                raw_has_math,
-                F.when(score >= threshold, is_formula_candidate(t)).otherwise(
-                    F.lit(False)
-                ),
-            ).otherwise(F.lit(False))
+        def _cols(b):
+            return formula_cols(b["text"], b["font_size"], strict_mode)
 
         def _formula(b, i):
-            t = stripped_text(b["text"])
-            _s, conf, _ = formula_score_cols(t, b["font_size"], strict_mode)
+            t, conf, _ = _cols(b)
             return F.struct(
                 i.alias("formula_index"),
                 b["page_num"].alias("page_num"),
@@ -235,7 +201,7 @@ def canonical_struct_from_parsed(
                 conf.alias("confidence"),
             )
 
-        formulas = F.transform(F.filter("blocks", _passes), _formula)
+        formulas = F.transform(F.filter("blocks", lambda b: _cols(b)[2]), _formula)
     else:
         formulas = F.expr(
             "CAST(array() AS array<struct<formula_index:int,page_num:int,"

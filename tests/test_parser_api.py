@@ -4,8 +4,21 @@ from __future__ import annotations
 
 import json
 
+import pytest
+from pyspark.sql import functions as F
+
 from metadatadocumentparser_spark import synth
+from metadatadocumentparser_spark.kernels import make_parse_kernel_arrow
 from metadatadocumentparser_spark.parser_api import TranscriptExtractor
+from metadatadocumentparser_spark.plans import extract_all
+from metadatadocumentparser_spark.sinks import canonical_struct, export_json
+
+# one block that passes the formula stage in normal mode but not in strict
+# mode (no strong indicator, symbol density < 0.3 → strict zeroes the score)
+LOOSE_ONLY_FORMULA = (
+    "%%PAGE 612 792\n%%BLK 54 100 284 114\n%%LN 54 100 284 112 1 0\n"
+    "%%SP 11 Helv|x_1 + y_2 and some words here"
+)
 
 
 def test_facade_parse_and_export(spark, tmp_path):
@@ -66,3 +79,52 @@ def test_sql_views_surface(spark):
         .collect()
     }
     assert sql_counts == df_counts and sql_counts
+
+
+def _docs(doc_struct) -> dict:
+    return {(r.conv_id, r.turn_idx): r.json for r in export_json(doc_struct).collect()}
+
+
+def test_export_serializes_the_tables_it_is_handed(spark):
+    """export()/export_to_dict() serialize the outs dict they are given: a
+    result from an earlier parse() keeps that parse's flags, and caller
+    edits to the returned tables show up in the export."""
+    df = spark.createDataFrame(
+        synth.synth_local(4, 2)
+        + [dict(conv_id="conv-strict", turn_idx=0, role="assistant",
+                text=LOOSE_ONLY_FORMULA, tool=None, ts=None)],
+        schema=synth.TRANSCRIPT_DDL,
+    )
+    p = TranscriptExtractor(df)
+    strict = p.parse(extract_formulas=True, strict_mode=True)
+    loose = p.parse(extract_formulas=True, strict_mode=False)
+    # the two modes must export differently, or the first check proves nothing
+    assert _docs(canonical_struct(strict)) != _docs(canonical_struct(loose))
+    assert _docs(p.export_to_dict(strict)) == _docs(canonical_struct(strict))
+
+    unedited = _docs(p.export_to_dict(loose))
+    assert unedited == _docs(canonical_struct(loose))
+    loose["blocks"] = loose["blocks"].where(F.col("block_idx") > 0)
+    edited = _docs(p.export_to_dict(loose))
+    assert edited == _docs(canonical_struct(loose))
+    assert edited != unedited
+
+
+def test_unknown_parse_flag_raises_on_driver(spark):
+    """A misspelled parse flag is a TypeError while the plan is built on
+    the driver — never an executor failure after a Spark job started."""
+    df = spark.createDataFrame(synth.synth_local(2, 2), schema=synth.TRANSCRIPT_DDL)
+    sc = spark.sparkContext
+    group = "unknown-parse-flag"
+    sc.setJobGroup(group, "no job may run for a misspelled flag")
+    try:
+        with pytest.raises(TypeError, match="text_methd"):
+            extract_all(df, text_methd="x")
+        with pytest.raises(TypeError, match="text_methd"):
+            make_parse_kernel_arrow(None, text_methd="x")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        df.count()  # the group does record jobs, so the check above can fail
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

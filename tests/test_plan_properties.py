@@ -55,13 +55,16 @@ def test_bnlj_only_in_labeled_baselines(spark):
 
 
 def test_extraction_path_no_exchange(spark):
-    """scan → kernel → projection: the turns path must stay shuffle-free."""
+    """scan → kernel → projection: the turns path must stay shuffle-free,
+    with exactly one Python stage (the mapInArrow parse kernel)."""
     from metadatadocumentparser_spark import synth
     from metadatadocumentparser_spark.plans import parse_transcripts, turns_of
 
     df = spark.createDataFrame(synth.synth_local(5, 2), schema=synth.TRANSCRIPT_DDL)
     plan = _plan(turns_of(parse_transcripts(df, repartition=False)))
     assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
 
 
 def test_tpch_scan_pushdown(spark):

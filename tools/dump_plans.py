@@ -1,7 +1,7 @@
 """Dump formatted physical plans for the headline queries → PLANS.md.
 
 What to look for (and what the engine guarantees):
-- extraction turns: ONE MapInPandas over the scan, project-only above it —
+- extraction turns: ONE MapInArrow over the scan, project-only above it —
   zero Exchange operators; formulas add exactly one window Exchange over
   the ~0.1% of blocks passing the score threshold;
 - tpch q1: FileScan with PushedFilters + pruned ReadSchema, partial agg;
